@@ -80,6 +80,9 @@ _CSV_WRITE_OPTIONS = {
     "dateFormat": "yyyy-MM-dd",
     "nullValue": "",
     "emptyValue": '""',
+    # Spark's writer trims string values by default; DuckDB keeps them
+    "ignoreLeadingWhiteSpace": False,
+    "ignoreTrailingWhiteSpace": False,
 }
 
 

@@ -2,7 +2,11 @@
 (ADVICE r1: hidden .crc files corrupt KBC sliced uploads; string
 'false' nullable metadata parsed truthy)."""
 
+import csv
+import glob
 import os
+
+import pytest
 
 from component_duckdb_transformation_spark.component import _schema_from_manifest
 from component_duckdb_transformation_spark.configuration import OutputTable
@@ -26,6 +30,33 @@ def test_sliced_export_dir_contains_only_part_csvs(spark, tmp_path):
     assert entries, "sliced dir should contain data slices"
     bad = [e for e in entries if not (e.startswith("part-") and e.endswith(".csv"))]
     assert bad == [], f"non-slice files left in sliced dir: {bad}"
+
+
+@pytest.mark.parametrize("sliced", [False, True])
+def test_csv_export_keeps_leading_and_trailing_blanks(spark, tmp_path, sliced):
+    values = ["  a  ", " ", "\tb"]
+    spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i INT, s STRING") \
+        .createOrReplaceTempView("blanks")
+    out_dir = str(tmp_path / "out")
+    os.makedirs(out_dir)
+    export_table(
+        spark,
+        "blanks",
+        OutputTable(source="blanks.csv", destination="out.c-x.blanks"),
+        out_dir,
+        order_by="i",
+        sliced=sliced,
+    )
+    path = os.path.join(out_dir, "blanks.csv")
+    files = sorted(glob.glob(os.path.join(path, "*.csv"))) if sliced else [path]
+    rows = []
+    for f in files:
+        with open(f, "rb") as fh:
+            raw = fh.read()
+        rows += list(csv.reader(raw.decode("utf-8").splitlines()))
+    if not sliced:
+        assert rows.pop(0) == ["i", "s"]
+    assert sorted((int(i), s) for i, s in rows) == list(enumerate(values))
 
 
 def test_nullable_metadata_string_false():

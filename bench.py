@@ -36,7 +36,8 @@ from component_duckdb_transformation_spark.workloads import (  # noqa: E402
     register_tables,
 )
 
-# conf-mutating workloads (flagged in the registry): chained, not pooled
+# conf-mutating workloads (flagged in the registry): pooled, each on its
+# own newSession() clone
 SERIAL = {name for name, wl in WORKLOADS.items() if wl.serial}
 
 # how many of the slowest queries get a sequential re-time pass

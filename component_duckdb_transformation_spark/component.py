@@ -6,11 +6,20 @@ Flow of ``run()`` (mirrors reference src/component.py:36-56):
 1. parse ``config.json`` -> :class:`Configuration`
 2. optional startup syntax check
 3. import: every entry under ``in/tables`` becomes a temp view
-   (manifest-driven schema; input-mapping destination overrides name)
+   (manifest-driven schema; input-mapping destination overrides name),
+   all entries concurrently on the job's worker pool
 4. execute: DAG-batched blocks of SQL scripts on Spark (FAIR pools,
    fail-fast)
-5. export: every output-mapping entry -> quoted CSV + manifest
+5. export: every output-mapping entry -> quoted CSV + manifest, all
+   entries concurrently on the same pool once the last block succeeded
 6. out-file manifests
+
+Steps 3 and 5 are one Spark job or more per entry (schema inference, a
+CSV write and its commit), where the reference's ``CREATE VIEW`` and
+``COPY TO`` cost next to nothing, so they share one pool of ``threads``
+workers. Entries that resolve to the same view name or output file run
+in config order inside one task; every task finishes, then the first
+failing entry in listing or config order raises its error.
 
 Divergence from the reference, by design: no ``.duck.db`` passthrough —
 the persistent store is the TableStore's Parquet warehouse dir, which
@@ -23,10 +32,11 @@ from __future__ import annotations
 import json
 import logging
 import os
-import shutil
 import time
-from typing import Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable, Optional, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 from . import set_requested_engine_version
@@ -43,6 +53,8 @@ from .sources.table_import import create_input_view
 from .validators.sql_validator import SQLValidator
 
 LOG = logging.getLogger(__name__)
+
+_T = TypeVar("_T")
 
 
 def _load_manifest(path: str) -> dict:
@@ -178,7 +190,17 @@ class Component:
             if result.type.value == "danger":
                 raise UserException(f"SQL syntax check failed:\n{result.message}")
 
-        self._create_input_tables()
+        with ThreadPoolExecutor(
+            max_workers=self.params.threads or 4, thread_name_prefix="cdts-io"
+        ) as pool:
+            self._run_job(pool)
+        export_file_manifests(
+            self.files_output_mapping, os.path.join(self.data_dir, "out", "files")
+        )
+        LOG.info("Component finished in %.2fs", time.time() - start)
+
+    def _run_job(self, pool: ThreadPoolExecutor) -> None:
+        self._create_input_tables(pool)
 
         warehouse = self.params.warehouse_dir or os.path.join(
             self.data_dir, "out", "files", ".spark-warehouse"
@@ -218,11 +240,7 @@ class Component:
             for d in res["scratch_dirs"]:
                 LOG.info("Temporary files: %s bytes=%s", d["path"], d["bytes"])
 
-        self._export_tables(store)
-        export_file_manifests(
-            self.files_output_mapping, os.path.join(self.data_dir, "out", "files")
-        )
-        LOG.info("Component finished in %.2fs", time.time() - start)
+        self._export_tables(store, pool)
 
     def _cancel_all_jobs(self) -> None:
         try:
@@ -230,17 +248,63 @@ class Component:
         except Exception:  # pragma: no cover
             pass
 
-    def _create_input_tables(self) -> None:
+    def _run_grouped(
+        self,
+        pool: ThreadPoolExecutor,
+        entries: Iterable[_T],
+        key: Callable[[_T], str],
+        task: Callable[[_T], None],
+    ) -> None:
+        """Run ``task`` over ``entries`` on ``pool``: entries with the same
+        ``key`` run in order inside one pool task, the groups concurrently,
+        each with the caller's Spark job group and local properties. Every
+        task finishes; then the first failing entry, in ``entries`` order,
+        raises its exception."""
+        groups: dict[str, list[tuple[int, _T]]] = {}
+        for i, entry in enumerate(entries):
+            groups.setdefault(key(entry), []).append((i, entry))
+        errors: dict[int, Exception] = {}
+
+        def run_group(members: list[tuple[int, _T]]) -> None:
+            for i, entry in members:
+                try:
+                    task(entry)
+                except Exception as exc:  # noqa: BLE001 - raised below, in order
+                    errors[i] = exc
+                    return
+
+        # wrapped per task: the wrapper copies the caller's local
+        # properties once, and a shared copy would leak between threads
+        futures = [
+            pool.submit(inheritable_thread_target(self.spark)(run_group), members)
+            for members in groups.values()
+        ]
+        for future in futures:
+            future.result()
+        if errors:
+            raise errors[min(errors)]
+
+    def _create_input_tables(self, pool: ThreadPoolExecutor) -> None:
         t0 = time.time()
-        for table in self.get_input_tables_definitions():
+
+        def create(table: InputTable) -> None:
             created = create_input_view(self.spark, table, self.params.dtypes_infer)
             LOG.info("Input table created: %s (is_view=%s)", created.name, created.is_view)
+
+        # temp-view names are case-insensitive
+        self._run_grouped(
+            pool,
+            self.get_input_tables_definitions(),
+            lambda table: table.destination.lower(),
+            create,
+        )
         LOG.debug("Input tables created in %.2fs", time.time() - t0)
 
-    def _export_tables(self, store: TableStore) -> None:
+    def _export_tables(self, store: TableStore, pool: ThreadPoolExecutor) -> None:
         out_dir = os.path.join(self.data_dir, "out", "tables")
         os.makedirs(out_dir, exist_ok=True)
-        for mapping in self.output_mapping:
+
+        def export(mapping: OutputTable) -> None:
             order_by = None
             if self.executor is not None:
                 order_by = self.executor.view_order_by.get(mapping.source)
@@ -254,6 +318,11 @@ class Component:
                 order_by=order_by,
                 sliced=self.params.sliced_output,
             )
+
+        # the source names both the view and the output file
+        self._run_grouped(
+            pool, self.output_mapping, lambda mapping: mapping.source.lower(), export
+        )
 
     # -- sync actions (reference src/component.py:93-137) ------------------
     def syntax_check(self) -> ValidationResult:

@@ -7,8 +7,9 @@ dynamic AppCDS maps those classes from an archive that a trained JVM
 wrote at exit, which roughly halves the launch.
 
 - **Where.** ``jvm/driver-<key>.jsa``, next to ``duckspark.jar``
-  (gitignored). The key hashes the JDK and the listing (name, size,
-  mtime) of ``$SPARK_HOME/jars``, so upgrading either trains a new one.
+  (gitignored). The key hashes the JDK, the launch conf dir's path and
+  the listing (name, size, mtime) of ``$SPARK_HOME/jars``, so upgrading
+  either, or moving the checkout, trains a new one.
 - **Training.** When the archive is missing, the first launch trains it
   once in a child process (``python -m`` this module): the child builds
   an engine session with ``-XX:ArchiveClassesAtExit``, runs a small
@@ -114,13 +115,18 @@ def spark_home() -> str:
     return _find_spark_home()
 
 
-def archive_key(spark_home_dir: str, jdk: str) -> str:
+def archive_key(spark_home_dir: str, jdk: str, conf_dir: str) -> str:
     """Hash of the JDK (path and ``release`` file) and of the driver
-    classpath's jar listing. Raises OSError when there is no jars dir."""
+    classpath: the launch conf dir and the jars dir (paths and jar
+    listing). The archive records the classpath's absolute paths and the
+    JVM rejects it, without a warning, when they differ, so a moved or
+    copied checkout gets a key of its own. Raises OSError when there is
+    no jars dir."""
     h = hashlib.sha256(jdk.encode())
     with contextlib.suppress(OSError), open(os.path.join(jdk, "release"), "rb") as fh:
         h.update(fh.read())
     jars = os.path.join(spark_home_dir, "jars")
+    h.update(f"\n{conf_dir}\0{jars}".encode())
     for name in sorted(os.listdir(jars)):
         st = os.stat(os.path.join(jars, name))
         h.update(f"\n{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
@@ -192,7 +198,7 @@ def driver_archive(max_memory_mb: int, extra_conf: Mapping[str, str]) -> DriverA
         conf_dir, reason = launch_conf_dir(home)
     if not reason:
         try:
-            key = archive_key(home, java_home())
+            key = archive_key(home, java_home(), conf_dir)
         except OSError as exc:
             reason = f"cannot list the driver jars: {exc}"
     if reason:

@@ -7,6 +7,3 @@ class UserException(Exception):
     without a stack trace, mirroring the reference's UserException usage
     (e.g. reference src/query_orchestrator.py:404-420)."""
 
-
-class EngineError(Exception):
-    """Internal engine failure."""

@@ -3585,22 +3585,6 @@ def _mad_round_sql(expr: str) -> str:
     return f"floor(({expr}) + 0.5D)"
 
 
-def _mad_median_sql(arr: str) -> str:
-    """DuckDB median over a SORTED double array: middle element for
-    odd counts, mean of the two middles for even, NULL when empty."""
-    return (
-        f"(CASE WHEN size({arr}) = 0 THEN CAST(NULL AS DOUBLE) "
-        f"WHEN size({arr}) % 2 = 1 "
-        f"THEN CAST(element_at({arr}, "
-        f"CAST((size({arr}) + 1) / 2 AS INT)) AS DOUBLE) "
-        f"ELSE (CAST(element_at({arr}, "
-        f"CAST(size({arr}) / 2 AS INT)) AS DOUBLE) + "
-        f"CAST(element_at({arr}, "
-        f"CAST(size({arr}) / 2 AS INT) + 1) AS DOUBLE)) / 2.0 "
-        "END)"
-    )
-
-
 def _mad_fold_sql(collected: str, mode) -> str:
     """median(abs(x - median(x))) folded over ONE collected array
     expression (an aggregate OR window ``collect_list`` call — either
@@ -9760,39 +9744,6 @@ def _contains_expanding_call(arg_tokens: List[Token]) -> bool:
     return False
 
 
-def _numeric_literal_chain(arg_tokens: List[Token]) -> Optional[str]:
-    """'decimal' / 'int' when the argument is an arithmetic chain
-    (+ - * and parens) over plain numeric literals — statically typed
-    the same way in BOTH engines (DECIMAL when any literal is
-    fractional, INTEGER otherwise), else None. Exponent literals
-    (DOUBLE-typed in DuckDB) and any other token disqualify; division
-    is excluded (DuckDB types decimal division differently)."""
-    code = [t for t in arg_tokens if t.kind not in ("ws", "comment")]
-    if not code:
-        return None
-    has_frac = False
-    for t in code:
-        if t.kind == "op" and t.text in ("(", ")", "+", "-", "*"):
-            continue
-        if (
-            t.kind in ("word", "number")
-            and _PLAIN_NUM_CHAIN_RE.match(t.text)
-        ):
-            has_frac = has_frac or "." in t.text
-            continue
-        return None
-    return "decimal" if has_frac else "int"
-
-
-def _decimal_literal_chain(arg_tokens: List[Token]) -> bool:
-    """True for fractional-literal arithmetic chains — DECIMAL-typed in
-    BOTH engines, where Spark's native round/ceil/floor already match
-    DuckDB (values, scale-keeping renderings, half-away ties; probed).
-    Pure-integer chains return False (DuckDB types their round/ceil
-    DOUBLE, which the typeof template's CASE coercion reproduces)."""
-    return _numeric_literal_chain(arg_tokens) == "decimal"
-
-
 # The fns whose DuckDB result type is a function of the argument type
 # in a way this translator's emissions REPRODUCE when the argument is
 # statically known (see _static_numeric_type): abs is untouched
@@ -11596,24 +11547,6 @@ def _visibly_string_base(base: List[Token]) -> bool:
         and code[0].text.lower() in _STRING_VALUED_FNS
         and code[1].kind == "op" and code[1].text == "("
         and _matching_paren(code, 1) == len(code) - 1
-    )
-
-
-def _negative_int_literal(tokens: List[Token]) -> bool:
-    """True when a token run is exactly a negative integer literal."""
-    code = [t for t in tokens if t.kind not in ("ws", "comment")]
-    if len(code) == 2:
-        return (
-            code[0].kind == "op"
-            and code[0].text == "-"
-            and code[1].kind == "word"
-            and code[1].text.isdigit()
-        )
-    return (
-        len(code) == 1
-        and code[0].kind == "word"
-        and code[0].text.startswith("-")
-        and code[0].text[1:].isdigit()
     )
 
 

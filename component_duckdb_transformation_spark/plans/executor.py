@@ -4946,10 +4946,6 @@ def _parse_drop(sql: str) -> Optional[tuple[str, bool]]:
     return name, if_exists
 
 
-def _delete_where(sql: str) -> Optional[str]:
-    return _delete_using_where(sql)[1]
-
-
 def _delete_using_where(sql: str) -> tuple[Optional[str], Optional[str]]:
     """Split ``DELETE FROM t [USING sources] [WHERE pred]`` into
     (using_text, where_text)."""

@@ -137,6 +137,38 @@ def _strip_order_qualifiers(clause: str, columns: list[str]) -> str:
     return "".join(out)
 
 
+def _write_csv(
+    df_out: DataFrame, name: str, out_path: str, out_tables_dir: str, sliced: bool
+) -> None:
+    """Write table ``name`` as one CSV file or a sliced CSV dir at ``out_path``."""
+    if sliced:
+        # parallel part-file write; KBC sliced output = headerless dir +
+        # column names in the manifest
+        opts = dict(_CSV_WRITE_OPTIONS, header=False)
+        df_out.write.mode("overwrite").options(**opts).csv(out_path)
+        # KBC treats EVERY file in a sliced dir as a data slice — remove
+        # all of Spark's bookkeeping output, including the HIDDEN local-FS
+        # checksum files (.part-*.csv.crc, ._SUCCESS.crc) that glob('*')
+        # would miss because '*' doesn't match dotfiles.
+        for entry in os.listdir(out_path):
+            if not (entry.startswith("part-") and entry.endswith(".csv")):
+                os.remove(os.path.join(out_path, entry))
+    else:
+        tmp = tempfile.mkdtemp(prefix="cdts-export-", dir=out_tables_dir)
+        try:
+            # coalesce(1) is applied at write, after the (distributed)
+            # sort/compute: one task streams the final file
+            df_out.coalesce(1).write.mode("overwrite").options(
+                **_CSV_WRITE_OPTIONS
+            ).csv(tmp)
+            parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
+            if not parts:
+                raise UserException(f"Export of {name} produced no data file")
+            shutil.move(parts[0], out_path)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
 def export_table(
     spark: SparkSession,
     name: str,
@@ -170,33 +202,14 @@ def export_table(
     if mapping.primary_key:
         manifest["primary_key"] = mapping.primary_key
 
+    try:
+        _write_csv(df_out, name, out_path, out_tables_dir, sliced)
+    except UserException:
+        raise
+    except Exception as exc:
+        raise UserException(f"Error exporting table {name}: {exc}") from exc
     if sliced:
-        # parallel part-file write; KBC sliced output = headerless dir +
-        # column names in the manifest
-        opts = dict(_CSV_WRITE_OPTIONS, header=False)
-        df_out.write.mode("overwrite").options(**opts).csv(out_path)
-        # KBC treats EVERY file in a sliced dir as a data slice — remove
-        # all of Spark's bookkeeping output, including the HIDDEN local-FS
-        # checksum files (.part-*.csv.crc, ._SUCCESS.crc) that glob('*')
-        # would miss because '*' doesn't match dotfiles.
-        for entry in os.listdir(out_path):
-            if not (entry.startswith("part-") and entry.endswith(".csv")):
-                os.remove(os.path.join(out_path, entry))
         manifest["columns"] = list(df_out.columns)
-    else:
-        tmp = tempfile.mkdtemp(prefix="cdts-export-", dir=out_tables_dir)
-        try:
-            # coalesce(1) is applied at write, after the (distributed)
-            # sort/compute: one task streams the final file
-            df_out.coalesce(1).write.mode("overwrite").options(
-                **_CSV_WRITE_OPTIONS
-            ).csv(tmp)
-            parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
-            if not parts:
-                raise UserException(f"Export of {name} produced no data file")
-            shutil.move(parts[0], out_path)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     with open(out_path + ".manifest", "w", encoding="utf-8") as fh:
         json.dump(manifest, fh)

@@ -98,8 +98,9 @@ class Workload:
     description: str = ""
     # True for workloads whose execution temporarily mutates session-global
     # conf (the streaming drains override spark.sql.shuffle.partitions for
-    # their state stores): these must not run concurrently with anything
-    # else — bench.py chains them instead of pooling them.
+    # their state stores): these must not share a session with concurrent
+    # work — bench.py pools them like the rest, each on its own
+    # ``newSession()`` clone (own SQLConf and temp views).
     serial: bool = False
 
 

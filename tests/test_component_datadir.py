@@ -387,3 +387,115 @@ def test_round3_surface_datadir(spark, tmp_path):
     # matching DuckDB's native PIVOT
     assert pv[1] == ["0", "5", "0"]
     assert pv[2] == ["1", "0", "2"]
+
+
+def _write_config(data, blocks, inputs=(), outputs=(), **params) -> None:
+    config = {
+        "parameters": {"threads": 4, "blocks": blocks, **params},
+        "storage": {
+            "input": {"tables": list(inputs)},
+            "output": {"tables": [{"source": s, "destination": f"out.c-out.{s}"} for s in outputs]},
+        },
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+
+
+def _block(*scripts: str) -> list[dict]:
+    return [{"name": "B", "codes": [{"name": f"C{i}", "script": [s]} for i, s in enumerate(scripts)]}]
+
+
+def test_inputs_whose_names_slug_alike_keep_their_own_data(spark, tmp_path):
+    """``a.b``, ``a-b`` and ``a_b`` share one slug; each must still bind
+    its own file, also when they are registered concurrently."""
+    data = tmp_path / "data"
+    in_tables = data / "in" / "tables"
+    for name, x in (("a.b", 1), ("a-b", 2), ("a_b", 3)):
+        _write(str(in_tables / name), f'"x"\n"{x}"\n')
+    _write_config(
+        data,
+        _block(
+            "CREATE TABLE r AS SELECT (SELECT x FROM 'a.b') AS dot, "
+            "(SELECT x FROM 'a-b') AS dash, (SELECT x FROM a_b) AS under;"
+        ),
+        outputs=["r"],
+    )
+    Component(data_dir=str(data), spark=spark).run()
+    rows = _read_rows(os.path.join(str(data), "out", "tables", "r"))
+    assert rows == [["dot", "dash", "under"], ["1", "2", "3"]]
+
+
+def test_failed_export_names_first_failing_table_and_finishes_the_others(spark, tmp_path):
+    """Exports run concurrently: every export finishes, the first failing
+    one in config order raises, the others' CSVs and manifests are
+    complete, and no temp dir is left behind."""
+    data = tmp_path / "data"
+    _write(str(data / "in" / "tables" / "s.csv"), '"s"\n"abc"\n')
+    good = [f"good{i}" for i in range(4)]
+    _write_config(
+        data,
+        _block(
+            *[f"CREATE TABLE {g} AS SELECT range AS id, '{g}' AS tag FROM range(3);" for g in good],
+            # both views fail at export, when the write evaluates the cast
+            "CREATE VIEW bad_first AS SELECT CAST(s AS INTEGER) AS x FROM 's.csv';",
+            "CREATE VIEW bad_second AS SELECT CAST(s AS INTEGER) + 1 AS x FROM 's.csv';",
+        ),
+        outputs=["good0", "bad_first", "good1", "good2", "bad_second", "good3"],
+        dtypes_infer=True,
+    )
+    with pytest.raises(UserException, match="Error exporting table bad_first: "):
+        Component(data_dir=str(data), spark=spark).run()
+    out = os.path.join(str(data), "out", "tables")
+    for g in good:
+        rows = _read_rows(os.path.join(out, g))
+        assert rows[0] == ["id", "tag"]
+        assert sorted(rows[1:]) == [["0", g], ["1", g], ["2", g]]
+        with open(os.path.join(out, g + ".manifest"), encoding="utf-8") as fh:
+            assert json.load(fh)["destination"] == f"out.c-out.{g}"
+    assert sorted(os.listdir(out)) == sorted(good + [g + ".manifest" for g in good])
+
+
+def test_malformed_inputs_raise_the_first_in_listing_order(spark, tmp_path):
+    data = tmp_path / "data"
+    in_tables = data / "in" / "tables"
+    # listing order is by name: a_bad before b_bad, whichever fails first
+    for name in ("b_bad.csv", "a_bad.csv"):
+        _write(str(in_tables / name), '"x","y"\n"1","2"\n')
+        _write(
+            str(in_tables / (name + ".manifest")),
+            json.dumps({"id": f"in.c-app.{name}", "columns": ["x", "y", "z"]}),
+        )
+    _write(str(in_tables / "ok.csv"), '"x"\n"1"\n')
+    _write_config(data, _block("CREATE TABLE r AS SELECT * FROM 'ok.csv';"), dtypes_infer=True)
+    with pytest.raises(UserException, match=r"^Table a_bad\.csv: manifest lists 3 columns"):
+        Component(data_dir=str(data), spark=spark).run()
+
+
+def test_import_and_export_jobs_run_in_the_callers_job_group(spark, tmp_path):
+    """Pool threads take the caller's job group, so a harness keyed on it
+    (and a cancel of it) still covers the import and export jobs."""
+    data = tmp_path / "data"
+    in_tables = data / "in" / "tables"
+    for name in ("p.csv", "q.csv"):
+        _write(str(in_tables / name), '"x"\n"1"\n"2"\n')
+    _write_config(
+        data,
+        _block(
+            "CREATE VIEW pv AS SELECT * FROM 'p.csv';",
+            "CREATE VIEW qv AS SELECT * FROM 'q.csv';",
+        ),
+        outputs=["pv", "qv"],
+        dtypes_infer=True,
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"caller-{tmp_path.name}"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "component job")
+    try:
+        Component(data_dir=str(data), spark=spark).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # two schema-inference reads and two CSV writes at least
+    assert len(tracker.getJobIdsForGroup(group)) >= 4
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before

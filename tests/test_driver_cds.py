@@ -25,6 +25,7 @@ from component_duckdb_transformation_spark import driver_cds, session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAGIC = (0xF00BABA8).to_bytes(4, "little")
+CONF = "/srv/checkout/jvm/empty-conf"
 
 
 @pytest.fixture()
@@ -76,24 +77,34 @@ def trainer(monkeypatch):
 
 def test_archive_key_tracks_jar_listing_and_jdk(fake_host, tmp_path):
     home, jdk, _ = fake_host
-    key = driver_cds.archive_key(str(home), str(jdk))
-    assert driver_cds.archive_key(str(home), str(jdk)) == key
+    key = driver_cds.archive_key(str(home), str(jdk), CONF)
+    assert driver_cds.archive_key(str(home), str(jdk), CONF) == key
 
     jar = home / "jars" / "a.jar"
     st = jar.stat()
     jar.write_bytes(b"jar a.jar, rebuilt")
     os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
-    resized = driver_cds.archive_key(str(home), str(jdk))
+    resized = driver_cds.archive_key(str(home), str(jdk), CONF)
     assert resized != key
 
     os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    touched = driver_cds.archive_key(str(home), str(jdk))
+    touched = driver_cds.archive_key(str(home), str(jdk), CONF)
     assert touched not in (key, resized)
 
     other_jdk = tmp_path / "jdk-other"
     other_jdk.mkdir()
     (other_jdk / "release").write_text((jdk / "release").read_text())
-    assert driver_cds.archive_key(str(home), str(other_jdk)) != touched
+    assert driver_cds.archive_key(str(home), str(other_jdk), CONF) != touched
+
+
+def test_archive_key_tracks_launch_conf_dir(fake_host, tmp_path):
+    """The archive records the conf dir as its first classpath entry; a
+    checkout copied or moved elsewhere launches with another conf dir
+    and must not reuse an archive the JVM would reject."""
+    home, jdk, _ = fake_host
+    here = driver_cds.archive_key(str(home), str(jdk), str(tmp_path / "a" / "empty-conf"))
+    moved = driver_cds.archive_key(str(home), str(jdk), str(tmp_path / "b" / "empty-conf"))
+    assert here != moved
 
 
 def test_templates_only_conf_dir_is_redirected(fake_host, monkeypatch):
@@ -147,7 +158,8 @@ def test_missing_archive_is_trained_once_under_concurrent_launches(fake_host, tr
 
 def test_corrupt_archive_is_discarded_and_retrained(fake_host, trainer, caplog):
     home, jdk, jvm_dir = fake_host
-    path = jvm_dir / f"driver-{driver_cds.archive_key(str(home), str(jdk))}.jsa"
+    key = driver_cds.archive_key(str(home), str(jdk), str(jvm_dir / "empty-conf"))
+    path = jvm_dir / f"driver-{key}.jsa"
     path.write_bytes(b"not an archive")
     with caplog.at_level(logging.WARNING, logger=driver_cds.LOG.name):
         archive = driver_cds.driver_archive(1024, {})
@@ -275,7 +287,11 @@ def test_damaged_archive_still_yields_a_working_session(tmp_path):
         good = driver_cds.driver_archive(1024, {{}}).path
         driver_cds.JVM_DIR = {str(tmp_path / "jvm")!r}
         os.makedirs(driver_cds.JVM_DIR)
-        damaged = os.path.join(driver_cds.JVM_DIR, os.path.basename(good))
+        # the key covers the conf dir, which moved with JVM_DIR
+        home = driver_cds.spark_home()
+        conf_dir, _ = driver_cds.launch_conf_dir(home)
+        key = driver_cds.archive_key(home, driver_cds.java_home(), conf_dir)
+        damaged = os.path.join(driver_cds.JVM_DIR, f"driver-{{key}}.jsa")
         with open(good, "rb") as src, open(damaged, "wb") as dst:
             dst.write(src.read(os.path.getsize(good) // 3))
         spark = build_spark_session(threads=2, max_memory_mb=1024)
